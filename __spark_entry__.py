@@ -20,22 +20,9 @@ sys.path.insert(0, "/root/repo")
 
 
 def _registry():
-    from employee_analytics_etl_spark.plans import (  # noqa: F401
-        registry,
-        registry_ext,
-        registry_funcs,
-        registry_more,
-        registry_r5,
-        registry_r6,
-        registry_r7,
-        registry_r8,
-        registry_r9,
-        registry_r10,
-        registry_r11,
-        registry_r12,
-    )
+    from employee_analytics_etl_spark.plans.registry import load_registry
 
-    return registry.QUERIES, registry.ORACLE
+    return load_registry()
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -341,21 +341,10 @@ def main() -> None:
     load_warning = bool(load_start) and load_start[0] > LOAD_WARN_THRESHOLD
 
     t0 = time.time()
-    from employee_analytics_etl_spark.plans import (  # noqa: F401
-        registry,
-        registry_ext,
-        registry_funcs,
-        registry_more,
-        registry_r5,
-        registry_r6,
-        registry_r7,
-        registry_r8,
-        registry_r9,
-        registry_r10,
-        registry_r11,
-        registry_r12,
-    )
+    from employee_analytics_etl_spark.plans.registry import load_registry
     from employee_analytics_etl_spark.session import build_session
+
+    queries, _ = load_registry()
 
     spark = build_session(app_name="bench")
 
@@ -392,7 +381,7 @@ def main() -> None:
             for n in os.environ["SPARK_GRAFT_QUERIES"].split(",")
             if n.strip()
         ]
-        unknown = [n for n in names if n not in registry.QUERIES]
+        unknown = [n for n in names if n not in queries]
         if unknown:
             raise SystemExit(f"SPARK_GRAFT_QUERIES unknown names: {unknown}")
 
@@ -407,7 +396,7 @@ def main() -> None:
         for _ in range(2):
             for name in names:
                 try:
-                    registry.QUERIES[name](spark, warm_dir).write.format(
+                    queries[name](spark, warm_dir).write.format(
                         "noop"
                     ).mode("overwrite").save()
                 except Exception as exc:  # surface, don't silently skip
@@ -423,7 +412,7 @@ def main() -> None:
     for _ in range(2):
         for name in names:
             try:
-                registry.QUERIES[name](spark, sf_dir).write.format(
+                queries[name](spark, sf_dir).write.format(
                     "noop"
                 ).mode("overwrite").save()
             except Exception as exc:
@@ -435,7 +424,7 @@ def main() -> None:
     per_query_median: dict[str, float] = {}
     total = 0.0
     for name in names:
-        fn = registry.QUERIES[name]
+        fn = queries[name]
         runs = [_time_query(fn, spark, sf_dir) for _ in range(BENCH_RUNS)]
         best = min(runs)
         per_query[name] = round(best, 3)

@@ -208,6 +208,46 @@ def shingle_sets(
     return out
 
 
+def sorted_pairs(ids: str) -> Column:
+    """Every (ids[i], ids[j]) pair with i < j of the array column named
+    ``ids``, as ``array<struct<id_a, id_b>>``. On a sorted array of
+    distinct ids that is each unordered pair once with id_a < id_b.
+
+    The package's one all-pairs lambda: every bucket → candidate-pair
+    step (shingle, MinHash and SimHash bands, winnowing fingerprints,
+    source and co-purchase graphs) explodes this Column, so the
+    C(size, 2) fan-out per bucket is written — and can be guarded —
+    in one place. Callers rename ``id_a``/``id_b`` as they need."""
+    return F.expr(
+        f"flatten(transform({ids}, (x, i) -> "
+        f"transform(slice({ids}, i + 2, size({ids})), "
+        "y -> struct(x AS id_a, y AS id_b))))"
+    )
+
+
+def bucket_pairs(
+    df: DataFrame, keys: list[str], id_col: str, max_size: int | None = None
+) -> DataFrame:
+    """(id_a, id_b) pairs of ids sharing a bucket: groupBy(keys) →
+    sorted id list → keep buckets of 2 ≤ size ≤ ``max_size`` → explode
+    ``sorted_pairs``. One shuffle of the keys instead of a bucket
+    self-join; singleton buckets vanish in the filter instead of
+    flowing into a join probe side, and ``max_size`` (a document-
+    frequency cap) bounds the per-bucket fan-out at max_size²/2.
+
+    A pair sharing k buckets is emitted k times — callers count the
+    repeats (shared shingles / fingerprints) or ``distinct`` them."""
+    size = F.size("ids")
+    keep = size >= 2 if max_size is None else (size >= 2) & (size <= max_size)
+    return (
+        df.groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
+        .filter(keep)
+        .select(F.explode(sorted_pairs("ids")).alias("p"))
+        .select("p.id_a", "p.id_b")
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -240,16 +280,9 @@ def ngram_jaccard_pairs(
     # sorted id-pair combinations replaces the classic shingle
     # self-join — one shuffle instead of three, and the per-shingle
     # fanout is bounded by max_df²/2 by construction.
-    pair_expr = (
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), y -> struct(x AS id_a, y AS id_b))))"
-    )
     inter = (
-        sh.groupBy("shingle")
-        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-        .filter((F.size("ids") >= 2) & (F.size("ids") <= max_shingle_df))
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
-        .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
+        bucket_pairs(sh, ["shingle"], "id", max_shingle_df)
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("long").alias("intersection"))
     )
     out = (
@@ -293,16 +326,9 @@ def ngram_containment_pairs(
     ss = shingle_sets(df, id_col, text_col, n)
     sh = ss.select("id", F.explode("shingle_set").alias("shingle"))
     sizes = ss.select("id", "set_size")
-    pair_expr = (
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), y -> struct(x AS id_a, y AS id_b))))"
-    )
     inter = (
-        sh.groupBy("shingle")
-        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-        .filter((F.size("ids") >= 2) & (F.size("ids") <= max_shingle_df))
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
-        .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
+        bucket_pairs(sh, ["shingle"], "id", max_shingle_df)
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("long").alias("intersection"))
     )
     return (
@@ -405,7 +431,13 @@ def minhash_band_rows(
     assert num_hashes % rows_per_band == 0
     if wide is None:
         wide = minhash_signatures_wide(df, id_col, text_col, num_hashes, shingle_n)
-    n_bands = num_hashes // rows_per_band
+    return _band_rows(wide, num_hashes, rows_per_band)
+
+
+def _band_rows(sigs: DataFrame, num_hashes: int, rows_per_band: int) -> DataFrame:
+    """(id, band, bucket) rows of a signature table (id, m0..m{k-1}):
+    each band's ``rows_per_band`` minhashes concatenated into its
+    bucket key, one row per band."""
     bands = F.array(
         *[
             F.struct(
@@ -414,10 +446,10 @@ def minhash_band_rows(
                     *[F.col(f"m{b * rows_per_band + p}") for p in range(rows_per_band)]
                 ).alias("bucket"),
             )
-            for b in range(n_bands)
+            for b in range(num_hashes // rows_per_band)
         ]
     )
-    return wide.select("id", F.explode(bands).alias("bb")).select(
+    return sigs.select("id", F.explode(bands).alias("bb")).select(
         "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
     )
 
@@ -447,21 +479,7 @@ def minhash_lsh_candidates(
     per_band = minhash_band_rows(
         df, id_col, text_col, num_hashes, rows_per_band, shingle_n, wide=wide
     )
-    # groupBy + pair-explode instead of a bucket self-join: one shuffle
-    # of (band, bucket) keys, and singleton buckets vanish in the
-    # filter instead of flowing into a join probe side.
-    pair_expr = (
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), y -> struct(x AS id_a, y AS id_b))))"
-    )
-    return (
-        per_band.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .distinct()
-    )
+    return bucket_pairs(per_band, ["band", "bucket"], "id").distinct()
 
 
 def minhash_band_rows_stateless(
@@ -494,19 +512,7 @@ def minhash_band_rows_stateless(
         ).alias(f"m{s}")
         for s in range(num_hashes)
     ]
-    n_bands = num_hashes // rows_per_band
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat(
-                    *[F.col(f"m{b * rows_per_band + p}") for p in range(rows_per_band)]
-                ).alias("bucket"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return (
+    sig_rows = (
         df.select(
             F.col(id_col).alias("id"),
             F.expr(
@@ -516,11 +522,8 @@ def minhash_band_rows_stateless(
         .select("id", F.expr(grams).alias("_sh"))
         .filter(F.size("_sh") > 0)
         .select("id", *sigs)
-        .select("id", F.explode(bands).alias("bb"))
-        .select(
-            "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-        )
     )
+    return _band_rows(sig_rows, num_hashes, rows_per_band)
 
 
 def minhash_incremental_candidates(
@@ -559,17 +562,7 @@ def minhash_incremental_candidates(
             F.greatest(F.col("d.id"), F.col("b.id")).alias("id_b"),
         )
     )
-    pair_expr = (
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), y -> struct(x AS id_a, y AS id_b))))"
-    )
-    delta_self = (
-        d_bands.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-    )
+    delta_self = bucket_pairs(d_bands, ["band", "bucket"], "id")
     return cross.unionByName(delta_self).distinct()
 
 
@@ -720,14 +713,9 @@ def simhash_candidates(
     )
 
     # (1) hamming-0 pairs: every id pair within one signature group
-    intra_expr = (
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), "
-        "y -> struct(x AS id_a, y AS id_b))))"
-    )
     intra = (
         groups.filter(F.size("ids") >= 2)
-        .select(F.explode(F.expr(intra_expr)).alias("p"))
+        .select(F.explode(sorted_pairs("ids")).alias("p"))
         .select(
             F.col("p.id_a").alias("id_a"),
             F.col("p.id_b").alias("id_b"),
@@ -749,11 +737,6 @@ def simhash_candidates(
     per_band = dsig.select("simhash", F.explode(band_arr).alias("bb")).select(
         "simhash", F.col("bb.band").alias("band"), F.col("bb.val").alias("val")
     )
-    pair_expr = (
-        "flatten(transform(ss, (x, i) -> "
-        "transform(slice(ss, i + 2, size(ss)), "
-        "y -> struct(x AS s_a, y AS s_b))))"
-    )
     # (3) multi-band dedup as a filter: keep a signature pair only in
     # the LOWEST band in which the two signatures collide — decidable
     # from (s_a, s_b, band) alone, so no DISTINCT exchange is needed.
@@ -765,8 +748,8 @@ def simhash_candidates(
         per_band.groupBy("band", "val")
         .agg(F.array_sort(F.collect_list("simhash")).alias("ss"))
         .filter(F.size("ss") >= 2)
-        .select("band", F.explode(F.expr(pair_expr)).alias("p"))
-        .select("band", F.col("p.s_a").alias("s_a"), F.col("p.s_b").alias("s_b"))
+        .select("band", F.explode(sorted_pairs("ss")).alias("p"))
+        .select("band", F.col("p.id_a").alias("s_a"), F.col("p.id_b").alias("s_b"))
         .filter(F.expr(first_band))
         .withColumn("hamming", F.expr("bit_count(s_a ^ s_b)"))
         .filter(F.col("hamming") <= max_hamming)
@@ -1537,19 +1520,9 @@ def winnow_pairs(
     docs carry no pair signal and would fan out quadratically), sorted
     pair-explode, pair-count aggregate. Never an all-pairs self-join."""
     fps = winnow_fingerprints(df, id_col, text_col, k, w)
-    pair_expr = (
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), "
-        "y -> struct(x AS id_a, y AS id_b))))"
-    )
     return (
-        fps.groupBy("fp")
-        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-        .filter((F.size("ids") >= 2) & (F.size("ids") <= max_df))
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
-        .groupBy(
-            F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b")
-        )
+        bucket_pairs(fps, ["fp"], "id", max_df)
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )

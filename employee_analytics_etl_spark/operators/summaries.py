@@ -109,9 +109,9 @@ def project_workload(
     """project workload summary (reference scripts/transform.py:188-206).
 
     A4: per-project exact distinct team size + allocation sums. Exact
-    ``countDistinct`` (reference uses nunique); at 100 TB an
-    ``approx_count_distinct`` variant is available via ``approx=True``
-    in the pipeline config — reference semantics stay exact.
+    ``countDistinct`` (the reference uses nunique), so the semantics
+    stay exact; at 100 TB ``approx_count_distinct`` would be the
+    cheaper, approximate form.
     J5: projects ⟕ workload stats; C12 null-fills.
     """
     workload = assignments_clean.groupBy("project_id").agg(

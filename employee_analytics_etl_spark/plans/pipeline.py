@@ -140,7 +140,7 @@ def run_pipeline(spark: SparkSession, conf: PipelineConfig) -> dict:
             write_csv(
                 df,
                 os.path.join(conf.processed_dir, name),
-                single_file=conf.single_file_csv,
+                single_file=True,
             )
     if conf.jdbc_url:
         for name, df in outputs.items():

@@ -49,6 +49,34 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
+def load_registry() -> tuple[
+    dict[str, Callable[[SparkSession, str], DataFrame]], dict[str, str]
+]:
+    """Import every extension module — each registers its queries into
+    ``QUERIES``/``ORACLE`` on import — and return ``(QUERIES, ORACLE)``.
+
+    The one place that knows the module list. The imports stay inside
+    the function: ``registry_more`` and ``registry_r7`` import a shared
+    oracle CTE from ``registry_ext``, so importing the siblings at
+    module level here would form a cycle whenever ``registry_ext`` is
+    imported first."""
+    from . import (  # noqa: F401
+        registry_ext,
+        registry_funcs,
+        registry_more,
+        registry_r5,
+        registry_r6,
+        registry_r7,
+        registry_r8,
+        registry_r9,
+        registry_r10,
+        registry_r11,
+        registry_r12,
+    )
+
+    return QUERIES, ORACLE
+
+
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet_table(spark, sf_dir, name)
 
@@ -372,12 +400,7 @@ def validation_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = t(spark, sf_dir, "lineitem")
 
     def fused(df: DataFrame, table: str, checks: list[V.Check]) -> DataFrame:
-        aggs = [
-            F.sum(F.when(c.violation, 1).otherwise(0)).cast("long").alias(c.name)
-            for c in checks
-        ]
-        one = df.agg(*aggs)
-        stacked = one.selectExpr(
+        stacked = V.violation_counts(df, checks).selectExpr(
             "stack({n}, {args}) as (check_name, violations)".format(
                 n=len(checks),
                 args=", ".join(f"'{c.name}', {c.name}" for c in checks),
@@ -418,12 +441,7 @@ def validation_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
                  parent: DataFrame, pk: str) -> DataFrame:
         # lazy anti-join count — stays part of the single unioned plan
         # (no eager .count() action per check)
-        anti = (
-            child.filter(F.col(fk) != -1)
-            .select(fk)
-            .distinct()
-            .join(F.broadcast(parent.select(F.col(pk).alias(fk))), fk, "left_anti")
-        )
+        anti = V.ri_orphans(child, fk, parent, pk)
         return anti.agg(F.count(F.lit(1)).cast("long").alias("violations")).select(
             F.lit(table).alias("table_name"),
             F.lit(check).alias("check_name"),

@@ -2658,16 +2658,9 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # prefix_filter_jaccard_pairs).
     sh = D.shingles(docs, id_col="source", text_col="text")
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    pair_expr = (
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), y -> struct(x AS a, y AS b))))"
-    )
     shared = (
-        sh.groupBy("shingle")
-        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
-        .groupBy(F.col("p.a").alias("source_a"), F.col("p.b").alias("source_b"))
+        D.bucket_pairs(sh, ["shingle"], "id")
+        .groupBy(F.col("id_a").alias("source_a"), F.col("id_b").alias("source_b"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
     )
     return (

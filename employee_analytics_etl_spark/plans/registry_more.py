@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators import graph as G
+from ..operators.dedup import bucket_pairs, sorted_pairs
 from .registry import query, t
 from .registry_ext import _SHINGLES_CTE, _lang_count_sql
 
@@ -45,11 +46,6 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     blow-up. array_distinct before pairing: a part appearing twice in
     one order must not emit a self-pair."""
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    pair_expr = (
-        "flatten(transform(pk, (x, i) -> "
-        "transform(slice(pk, i + 2, size(pk)), "
-        "y -> struct(x AS u, y AS v))))"
-    )
     return (
         li.groupBy("l_orderkey")
         .agg(
@@ -57,8 +53,8 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.array_distinct(F.collect_list("l_partkey"))
             ).alias("pk")
         )
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select(F.col("p.u").alias("u"), F.col("p.v").alias("v"))
+        .select(F.explode(sorted_pairs("pk")).alias("p"))
+        .select(F.col("p.id_a").alias("u"), F.col("p.id_b").alias("v"))
         .distinct()
     )
 
@@ -3376,18 +3372,9 @@ def source_exact_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = docs.select(
         "source", F.md5("text").alias("content_md5")
     ).distinct()
-    pair_expr = (
-        "flatten(transform(ss, (x, i) -> "
-        "transform(slice(ss, i + 2, size(ss)), y -> struct(x AS a, y AS b))))"
-    )
     shared = (
-        h.groupBy("content_md5")
-        .agg(F.array_sort(F.collect_list("source")).alias("ss"))
-        .filter(F.size("ss") >= 2)
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
-        .groupBy(
-            F.col("p.a").alias("source_a"), F.col("p.b").alias("source_b")
-        )
+        bucket_pairs(h, ["content_md5"], "source")
+        .groupBy(F.col("id_a").alias("source_a"), F.col("id_b").alias("source_b"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
     # pair grid via the same sorted pair-explode (zero joins): one
@@ -3396,9 +3383,9 @@ def source_exact_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("source")
         .distinct()
         .agg(F.array_sort(F.collect_list("source")).alias("ss"))
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
+        .select(F.explode(sorted_pairs("ss")).alias("p"))
         .select(
-            F.col("p.a").alias("source_a"), F.col("p.b").alias("source_b")
+            F.col("p.id_a").alias("source_a"), F.col("p.id_b").alias("source_b")
         )
     )
     return grid.join(

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import sorted_pairs
 from .registry import query, t
 
 EPOCH = "1970-01-01"
@@ -229,16 +230,12 @@ def source_token_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    pair_expr = (
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), y -> struct(x AS a, y AS b))))"
-    )
     pairs = (
         c.select("source")
         .distinct()
         .agg(F.array_sort(F.collect_list("source")).alias("ids"))
-        .select(F.explode(F.expr(pair_expr)).alias("pr"))
-        .select(F.col("pr.a").alias("sa"), F.col("pr.b").alias("sb"))
+        .select(F.explode(sorted_pairs("ids")).alias("pr"))
+        .select(F.col("pr.id_a").alias("sa"), F.col("pr.id_b").alias("sb"))
     )
     grid = (
         p.join(F.broadcast(pairs), F.col("source") == F.col("sa"))
@@ -1033,14 +1030,9 @@ def copurchase_item_similarity_topk(
             "pk"
         )
     )
-    pair_expr = (
-        "flatten(transform(pk, (x, i) -> "
-        "transform(slice(pk, i + 2, size(pk)), "
-        "y -> struct(x AS u, y AS v))))"
-    )
     pairs = (
-        per_order.select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select(F.col("p.u").alias("u"), F.col("p.v").alias("v"))
+        per_order.select(F.explode(sorted_pairs("pk")).alias("p"))
+        .select(F.col("p.id_a").alias("u"), F.col("p.id_b").alias("v"))
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("nuv"))
         .filter(F.col("nuv") >= 2)

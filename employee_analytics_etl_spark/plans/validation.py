@@ -92,13 +92,22 @@ def positive_or_null(col: str) -> Check:
     return Check(f"positive_{col}", c.isNotNull() & (c <= 0))
 
 
+def violation_counts(df: DataFrame, checks: list[Check]) -> DataFrame:
+    """Lazy one-row aggregate of a table's row-level checks: the row
+    count ``__total`` plus one long violation count per check, named
+    after it — one scan however many checks (V9 fusion)."""
+    return df.agg(
+        F.count(F.lit(1)).alias("__total"),
+        *[
+            F.sum(F.when(c.violation, 1).otherwise(0)).cast("long").alias(c.name)
+            for c in checks
+        ],
+    )
+
+
 def run_checks(df: DataFrame, table: str, checks: list[Check]) -> TableReport:
     """Fused single-pass evaluation of row-level checks (V9 fusion)."""
-    aggs = [F.count(F.lit(1)).alias("__total")] + [
-        F.sum(F.when(c.violation, 1).otherwise(0)).cast("long").alias(c.name)
-        for c in checks
-    ]
-    row = df.agg(*aggs).collect()[0].asDict()
+    row = violation_counts(df, checks).collect()[0].asDict()
     rep = TableReport(table=table, total_rows=row.pop("__total"))
     for c in checks:
         rep.results[c.name] = int(row[c.name] or 0)
@@ -114,15 +123,22 @@ def pk_unique_violations(df: DataFrame, pk: str) -> int:
     )
 
 
-def ri_violations(
+def ri_orphans(
     child: DataFrame, fk: str, parent: DataFrame, pk: str, sentinel: int = -1
-) -> int:
-    """V4: distinct child FKs (excluding the −1 sentinel) not present in
-    the parent PK set — a hash LEFT ANTI join (reference
+) -> DataFrame:
+    """Lazy V4 frame: distinct child FKs (excluding the −1 sentinel) not
+    present in the parent PK set — a hash LEFT ANTI join (reference
     scripts/validation.py:28-45 does this with a quadratic list scan)."""
     child_keys = child.filter(F.col(fk) != sentinel).select(fk).distinct()
     parent_keys = parent.select(F.col(pk).alias(fk))
-    return child_keys.join(F.broadcast(parent_keys), fk, "left_anti").count()
+    return child_keys.join(F.broadcast(parent_keys), fk, "left_anti")
+
+
+def ri_violations(
+    child: DataFrame, fk: str, parent: DataFrame, pk: str, sentinel: int = -1
+) -> int:
+    """V4: the number of orphan child keys (``ri_orphans``)."""
+    return ri_orphans(child, fk, parent, pk, sentinel).count()
 
 
 # --- the reference's four table validators (V9 orchestration) ---------------

@@ -161,9 +161,9 @@ def load_sf_tables(
 
 def normalize_departments(df: DataFrame) -> DataFrame:
     """Ingest-time normalization of the departments table: accept the
-    name column as either ``name`` or ``department_name``; expose BOTH
-    downstream-facing names? No — canonicalize to ``department_name``
-    (operators alias as needed). Mirrors the tolerance at reference
+    name column as either ``name`` or ``department_name`` and
+    canonicalize it to ``department_name`` (operators alias as
+    needed). Mirrors the tolerance at reference
     scripts/transform.py:101-111 and scripts/main.py:94-95 without
     re-probing in every operator."""
     cols = df.columns
@@ -176,12 +176,6 @@ def normalize_departments(df: DataFrame) -> DataFrame:
     from pyspark.sql import functions as F
 
     return df.withColumn("department_name", F.lit("Unknown"))
-
-
-TESTDATA_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables=None) -> list[str]:

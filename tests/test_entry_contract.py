@@ -122,6 +122,78 @@ class TestUdfPolicy:
         assert not offenders, offenders
 
 
+def _policy_sources():
+    """(path, text) of every Python file in the package, tools and
+    tests plus the root entry points — the benchmark's own directory
+    (perfbench/) is out of scope."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    files = [root / "bench.py", root / "__spark_entry__.py"]
+    for d in ("employee_analytics_etl_spark", "tools", "tests"):
+        files += sorted((root / d).rglob("*.py"))
+    return root, [(py, py.read_text()) for py in files]
+
+
+class TestSingleSourcePolicy:
+    def test_all_pairs_lambda_only_in_kernel(self):
+        """The i < j all-pairs explode (a ``transform`` over each id
+        and the slice of ids after it) is written once, in
+        ``dedup.sorted_pairs``;
+        every candidate-pair generator calls that kernel so a fan-out
+        guard has one home. A hand-copied lambda anywhere else is a
+        regression."""
+        import ast
+        import re
+
+        root, sources = _policy_sources()
+        kernel = root / "employee_analytics_etl_spark" / "operators" / "dedup.py"
+        fn = next(
+            n
+            for n in ast.parse(kernel.read_text()).body
+            if isinstance(n, ast.FunctionDef) and n.name == "sorted_pairs"
+        )
+        pat = re.compile(r"slice\(\s*\{?\w+\}?\s*,\s*i\s*\+\s*2\b")
+        offenders, in_kernel = [], 0
+        for py, text in sources:
+            for i, line in enumerate(text.splitlines(), 1):
+                if not pat.search(line):
+                    continue
+                if py == kernel and fn.lineno <= i <= fn.end_lineno:
+                    in_kernel += 1
+                else:
+                    offenders.append(f"{py.relative_to(root)}:{i}: {line.strip()[:80]}")
+        assert not offenders, offenders
+        assert in_kernel == 1
+
+    def test_registry_module_list_only_in_registry(self):
+        """Only ``plans/registry.py`` (``load_registry``) knows which
+        modules register queries; callers use ``load_registry()``
+        instead of importing ``registry`` together with its extension
+        modules (a list that otherwise has to be edited in a dozen
+        places whenever a module is added)."""
+        import ast
+
+        root, sources = _policy_sources()
+        home = root / "employee_analytics_etl_spark" / "plans" / "registry.py"
+        offenders = []
+        for py, text in sources:
+            if py == home:
+                continue
+            for node in ast.walk(ast.parse(text)):
+                if not isinstance(node, ast.ImportFrom):
+                    continue
+                if not (node.module or "").endswith("plans"):
+                    continue
+                mods = [
+                    a.name for a in node.names
+                    if a.name == "registry" or a.name.startswith("registry_")
+                ]
+                if len(mods) >= 2:
+                    offenders.append(f"{py.relative_to(root)}:{node.lineno}: {mods}")
+        assert not offenders, offenders
+
+
 class TestSqlFrontDoor:
     def test_register_views_and_sql(self, spark):
         """The SQL front door: temp views over the testdata tables with
@@ -159,29 +231,18 @@ class TestGateCostTable:
         import os
         import re
 
-        from employee_analytics_etl_spark.plans import (  # noqa: F401
-            registry,
-            registry_ext,
-            registry_funcs,
-            registry_more,
-            registry_r5,
-            registry_r6,
-            registry_r7,
-            registry_r8,
-            registry_r9,
-            registry_r10,
-            registry_r11,
-            registry_r12,
-        )
+        from employee_analytics_etl_spark.plans.registry import load_registry
+
+        queries, _ = load_registry()
 
         path = os.path.join(os.path.dirname(__file__), "..", "COVERAGE.md")
         with open(path) as f:
             text = f.read()
         m = re.search(r"Distribution: [^\n]*\bn=(\d+)", text)
         assert m, "COVERAGE.md gate-cost distribution line missing"
-        assert int(m.group(1)) == len(registry.QUERIES), (
+        assert int(m.group(1)) == len(queries), (
             f"gate-cost table covers n={m.group(1)} queries but the "
-            f"registry holds {len(registry.QUERIES)} — re-run the full "
+            f"registry holds {len(queries)} — re-run the full "
             "sf0.01 selfcheck and update COVERAGE.md"
         )
 

@@ -1002,13 +1002,9 @@ class TestTrainingPipelineOps:
 
     @pytest.fixture(scope="class")
     def q(self):
-        from employee_analytics_etl_spark.plans import (  # noqa: F401
-            registry,
-            registry_ext,
-            registry_funcs,
-        )
+        from employee_analytics_etl_spark.plans.registry import load_registry
 
-        return registry.QUERIES
+        return load_registry()[0]
 
     def test_split_total_and_determinism(self, spark, q):
         a = q["doc_train_split"](spark, SF_SMOKE).collect()
@@ -1228,6 +1224,42 @@ class TestStatelessBandRows:
         a = sorted(map(tuple, D.minhash_band_rows(docs).collect()))
         b = sorted(map(tuple, D.minhash_band_rows_stateless(docs).collect()))
         assert a == b and len(a) > 0
+
+
+class TestPairKernel:
+    """The one all-pairs kernel behind every bucket → candidate-pair
+    generator: ``sorted_pairs`` (array → i < j pairs) and
+    ``bucket_pairs`` (group → sorted ids → size filter → explode)."""
+
+    def test_sorted_pairs_gives_every_i_lt_j_pair(self, spark):
+        from math import comb
+
+        rows = [(n, [10 + 3 * i for i in range(n)]) for n in (0, 1, 2, 5, 9)]
+        df = spark.createDataFrame(rows, "n int, ids array<long>")
+        out = df.select("n", D.sorted_pairs("ids").alias("p")).collect()
+        assert len(out) == len(rows)
+        for r in out:
+            pairs = [(p["id_a"], p["id_b"]) for p in r["p"]]
+            assert len(pairs) == comb(r["n"], 2)
+            assert len(set(pairs)) == len(pairs)
+            assert all(a < b for a, b in pairs)
+
+    def test_bucket_pairs_drops_singletons_and_oversized(self, spark):
+        from math import comb
+
+        rows = (
+            [("solo", 1)]
+            + [("trio", i) for i in (7, 3, 5)]
+            + [("big", i) for i in range(20, 25)]
+        )
+        df = spark.createDataFrame(rows, "k string, id long")
+        capped = D.bucket_pairs(df, ["k"], "id", max_size=4)
+        assert capped.columns == ["id_a", "id_b"]
+        assert sorted(map(tuple, capped.collect())) == [(3, 5), (3, 7), (5, 7)]
+        uncapped = D.bucket_pairs(df, ["k"], "id").collect()
+        assert len(uncapped) == comb(3, 2) + comb(5, 2)
+        assert all(r["id_a"] < r["id_b"] for r in uncapped)
+        assert 1 not in {x for r in uncapped for x in r}
 
 
 class TestInt8Quantize:
@@ -1951,16 +1983,14 @@ class TestIncrementalAggMerge:
     def test_merge_equals_full_recompute(self, spark):
         """The algebraic-merge property: base-aggregate + delta-aggregate
         merged must equal aggregating everything from scratch."""
-        from employee_analytics_etl_spark.plans import (  # noqa: F401
-            registry,
-            registry_funcs,
-        )
+        from employee_analytics_etl_spark.plans.registry import load_registry
         from employee_analytics_etl_spark.sources.readers import read_parquet_table
         from tests.conftest import SF_SMOKE
 
+        queries, _ = load_registry()
         merged = {
             tuple(r)
-            for r in registry.QUERIES["orders_incremental_agg_merge"](
+            for r in queries["orders_incremental_agg_merge"](
                 spark, SF_SMOKE
             ).collect()
         }

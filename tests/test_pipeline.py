@@ -78,7 +78,7 @@ class TestPipeline:
         d = os.path.join(conf.processed_dir, "summary_dept_metrics")
         assert os.path.isdir(d)
         files = [f for f in os.listdir(d) if f.endswith(".csv")]
-        assert len(files) == 1  # single_file_csv=True
+        assert len(files) == 1  # the pipeline writes single-file CSVs
 
     def test_workload_kept(self, result):
         # intentional divergence: the reference computes-then-drops the

@@ -418,13 +418,10 @@ class TestBrpBroadcastAdjudication:
             GENERATE_BROADCAST_OK,
             broadcast_over_generate,
         )
-        from employee_analytics_etl_spark.plans import (  # noqa: F401
-            registry,
-            registry_ext,
-        )
+        from employee_analytics_etl_spark.plans.registry import load_registry
 
         assert "knn_brp_euclidean" in GENERATE_BROADCAST_OK
-        df = registry.QUERIES["knn_brp_euclidean"](
+        df = load_registry()[0]["knn_brp_euclidean"](
             spark, "/root/testdata/sf0.001"
         )
         simple = df._jdf.queryExecution().executedPlan().toString()

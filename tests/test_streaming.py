@@ -1946,13 +1946,10 @@ class TestChooseWatermarkDelay:
         """DEFAULT_WATERMARK must equal choose_watermark_delay(curve, 0)
         on the LIVE loss curve — if the curve (or testdata) changes,
         this breaks instead of the default silently going stale."""
-        from employee_analytics_etl_spark.plans import (  # noqa: F401
-            registry,
-            registry_r8,
-        )
+        from employee_analytics_etl_spark.plans.registry import load_registry
         from employee_analytics_etl_spark.streaming import jobs
 
-        curve = registry.QUERIES["events_watermark_loss_curve"](
+        curve = load_registry()[0]["events_watermark_loss_curve"](
             spark, SF_SMOKE
         )
         sec = jobs.choose_watermark_delay(curve, max_dropped_share=0.0)

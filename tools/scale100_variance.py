@@ -199,22 +199,9 @@ def main() -> int:
         extra["spark.sql.adaptive.enabled"] = "false"
     spark = build_session(app_name="scale100-variance", extra_conf=extra)
 
-    from employee_analytics_etl_spark.plans import (  # noqa: F401
-        registry,
-        registry_ext,
-        registry_funcs,
-        registry_more,
-        registry_r5,
-        registry_r6,
-        registry_r7,
-        registry_r8,
-        registry_r9,
-        registry_r10,
-        registry_r11,
-        registry_r12,
-    )
+    from employee_analytics_etl_spark.plans.registry import load_registry
 
-    fn = registry.QUERIES[args.query]
+    fn = load_registry()[0][args.query]
     app = _app_id()
     result: dict = {
         "query": args.query,

@@ -13,11 +13,6 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
 
 def norm_cell(v):
     if isinstance(v, float):
@@ -42,21 +37,11 @@ def main() -> int:
 
     import duckdb
 
-    from employee_analytics_etl_spark.plans import (  # noqa: F401
-        registry,
-        registry_ext,
-        registry_funcs,
-        registry_more,
-        registry_r5,
-        registry_r6,
-        registry_r7,
-        registry_r8,
-        registry_r9,
-        registry_r10,
-        registry_r11,
-        registry_r12,
-    )
+    from employee_analytics_etl_spark.plans.registry import load_registry
     from employee_analytics_etl_spark.session import build_session
+    from employee_analytics_etl_spark.sources.schemas import TESTDATA_TABLES
+
+    queries, oracle = load_registry()
 
     # SPARK_GRAFT_SELFCHECK_PARTS sweeps shuffle parallelism — results
     # must be bit-identical at ANY partition count (the determinism
@@ -82,7 +67,7 @@ def main() -> int:
         extra_conf=extra or None,
     )
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TESTDATA_TABLES:
         # single-file fixtures are plain files; multifile layouts
         # (tools/gen_multifile.py) are directories of part files —
         # glob them so the oracle sees the same rows Spark scans
@@ -93,23 +78,23 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
         )
 
-    names = [n for n in registry.QUERIES if not only or n in only]
+    names = [n for n in queries if not only or n in only]
     failures = []
     for name in names:
         t0 = time.time()
         try:
-            sdf = registry.QUERIES[name](spark, sf_dir)
+            sdf = queries[name](spark, sf_dir)
             scols = sdf.columns
             srows = sdf.collect()
         except Exception as e:
             print(f"SPARK-ERROR {name}: {str(e).splitlines()[0][:200]}")
             failures.append(name)
             continue
-        if name not in registry.ORACLE:
+        if name not in oracle:
             print(f"ROWS-ONLY  {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
             continue
         try:
-            res = con.execute(registry.ORACLE[name])
+            res = con.execute(oracle[name])
             dcols = [d[0] for d in res.description]
             drows = res.fetchall()
         except Exception as e:
