@@ -98,6 +98,11 @@ class TestQueryIndex:
             "QUERY_INDEX.md is stale — run `python tools/gen_query_index.py` "
             "and commit the result"
         )
+        # the render itself must label every oracle-backed query 'hash'
+        from employee_analytics_etl_spark.plans.registry import load_registry
+
+        _, oracle = load_registry()
+        assert committed.count("| hash |") == len(oracle)
 
 
 class TestUdfPolicy:

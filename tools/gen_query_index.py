@@ -49,8 +49,8 @@ def render() -> str:
         # keep the cell one-line and short
         if len(first) > 110:
             first = first[:107] + "..."
-        oracle = "hash" if name in oracle else "rows-only"
-        lines.append(f"| `{name}` | {oracle} | `{rel}:{code.co_firstlineno}` | {first} |")
+        kind = "hash" if name in oracle else "rows-only"
+        lines.append(f"| `{name}` | {kind} | `{rel}:{code.co_firstlineno}` | {first} |")
     lines.append("")
     return "\n".join(lines)
 
