@@ -15,7 +15,6 @@ Differences from the reference's eager pandas lifecycle
 
 from __future__ import annotations
 
-import logging
 import os
 import time
 
@@ -36,7 +35,6 @@ from ..sources.sinks import jdbc_write_options, write_csv, write_jdbc, write_tex
 from . import validation as V
 from .reporting import generate_summary_report
 
-log = logging.getLogger("employee_analytics_etl_spark.pipeline")
 
 OUTPUT_COLUMNS = {
     # P8 column alignment per output table (reference scripts/main.py:96-105)

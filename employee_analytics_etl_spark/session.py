@@ -99,7 +99,9 @@ def build_session(
         .config("spark.cleaner.periodicGC.interval", "1min")
         # driver testdata ships TIMESTAMP(NANOS) parquet columns (events.ts);
         # Spark has no nanos type — read as epoch-nanos long, normalized in
-        # sources.readers.read_parquet_table.
+        # sources.readers.read_parquet_table. The conf changes inferred
+        # types, so it is part of that reader's schema-cache key (see the
+        # "Schema cache" paragraph of the sources.readers docstring).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # static conf — bucketed-table tests need a writable warehouse
         .config(

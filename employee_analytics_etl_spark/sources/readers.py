@@ -14,11 +14,24 @@ Scale: parquet readers keep Catalyst's predicate pushdown / column
 pruning intact (no ``.cache()`` here — callers decide materialization
 points). At 100 TB the facts arrive partitioned; readers accept a
 directory and let Spark do partition discovery + pruning.
+
+Schema cache: ``read_parquet_table`` infers a path's schema once per
+session. Inference (``spark.read.parquet`` without a schema) submits a
+footer-reading Spark job on every call; later reads of the same path
+pass the remembered ``StructType`` to ``spark.read.schema(...)``, which
+submits none. The cache holds metadata only, never rows: per
+``SparkSession`` (weakly, so a new session starts empty), one entry per
+path of ``(listing fingerprint, parquet type-mapping conf values,
+StructType)``. The fingerprint is the sorted recursive local listing as
+``(name, size, st_mtime_ns)``; when it or a conf value differs, the
+schema is inferred again and the entry replaced. A path that does not
+exist locally is read uncached, so Spark raises its own error.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -59,6 +72,56 @@ def read_csv_table(spark: SparkSession, path: str, table: str) -> DataFrame:
 NANOS_TS_COLUMNS: dict[str, list[str]] = {"events": ["ts"]}
 
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+# Confs that change the Spark types parquet columns infer to; a cached
+# schema is only reused under the values it was inferred with.
+_PARQUET_TYPE_CONFS = (_NANOS_AS_LONG,)
+
+# SparkSession -> {path: (fingerprint, conf values, StructType)}
+_SCHEMA_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def enable_parquet_nanos_as_long(spark: SparkSession) -> None:
+    """Read parquet TIMESTAMP(NANOS) as epoch-nanos BIGINT. A
+    runtime-settable SQL conf, so readers stay safe under driver
+    sessions not built by session.build_session."""
+    try:
+        spark.conf.set(_NANOS_AS_LONG, "true")
+    except Exception:
+        pass
+
+
+def _listing_fingerprint(path: str) -> tuple:
+    """Sorted ``(name, size, st_mtime_ns)`` of a file, or of every file
+    under a directory (names relative to it)."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+    out = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def _read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema inferred once per
+    session and unchanged path (see the module docstring)."""
+    if not os.path.exists(path):
+        return spark.read.parquet(path)
+    key = (_listing_fingerprint(path), tuple(spark.conf.get(c) for c in _PARQUET_TYPE_CONFS))
+    entries = _SCHEMA_CACHE.setdefault(spark, {})
+    hit = entries.get(path)
+    if hit is not None and hit[:2] == key:
+        return spark.read.schema(hit[2]).parquet(path)
+    df = spark.read.parquet(path)
+    entries[path] = (*key, df.schema)
+    return df
+
+
 def read_parquet_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Parquet scan of one driver-testdata table, with nanos-timestamp
     normalization for the ``events`` stream table."""
@@ -66,13 +129,8 @@ def read_parquet_table(spark: SparkSession, sf_dir: str, table: str) -> DataFram
     from pyspark.sql import types as T
 
     if table in NANOS_TS_COLUMNS:
-        # runtime-settable SQL conf — makes the reader safe under driver
-        # sessions not built by session.build_session
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
-    df = spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
+        enable_parquet_nanos_as_long(spark)
+    df = _read_parquet_cached(spark, os.path.join(sf_dir, f"{table}.parquet"))
     for c in NANOS_TS_COLUMNS.get(table, []):
         if c in df.columns and isinstance(df.schema[c].dataType, T.LongType):
             df = df.withColumn(

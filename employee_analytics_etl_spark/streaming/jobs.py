@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.readers import enable_parquet_nanos_as_long
+
 # MEASURED default delay for the event-time jobs below (r8, closing the
 # planner loop the way choose_blocking/choose_lsh_bands/choose_ann_index
 # closed ER/LSH/ANN): choose_watermark_delay on
@@ -185,10 +187,7 @@ def build_events_stream(
     """
     nanos = _events_ts_is_nanos_long(sf_dir, glob)
     if nanos:
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
+        enable_parquet_nanos_as_long(spark)
     reader = (
         spark.readStream.format("parquet")
         .schema(events_schema_nanos() if nanos else events_schema_micros())

@@ -211,6 +211,96 @@ class TestSchemaEvolution:
         ).lower() or "Failed" in str(ei.value)
 
 
+class TestParquetSchemaCache:
+    """read_parquet_table infers a path's schema once per session and
+    reads later calls with that StructType, which submits no Spark job;
+    a changed file listing or type-mapping conf re-infers."""
+
+    @staticmethod
+    def _jobs(spark, fn):
+        import uuid
+
+        sc = spark.sparkContext
+        group = f"schema-cache-test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def test_warm_read_submits_no_job(self, spark):
+        from employee_analytics_etl_spark.sources.readers import read_parquet_table
+        from tests.conftest import SF_SMOKE
+
+        first = read_parquet_table(spark, SF_SMOKE, "orders")
+        again, jobs = self._jobs(spark, lambda: read_parquet_table(spark, SF_SMOKE, "orders"))
+        assert jobs == 0
+        assert again.schema == first.schema
+
+    def test_rewritten_path_reinfers(self, spark, tmp_path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from employee_analytics_etl_spark.sources.readers import read_parquet_table
+
+        base = str(tmp_path)
+        # a Spark-written directory: overwrite with an added and a retyped column
+        path = os.path.join(base, "evolving.parquet")
+        spark.createDataFrame([(1, "a")], "id long, name string").write.parquet(path)
+        v1 = read_parquet_table(spark, base, "evolving")
+        assert v1.columns == ["id", "name"] and v1.collect()[0]["id"] == 1
+        spark.createDataFrame([("x", "b", 2.5)], "id string, name string, score double") \
+            .write.mode("overwrite").parquet(path)
+        v2 = read_parquet_table(spark, base, "evolving")
+        assert v2.schema.simpleString() == "struct<id:string,name:string,score:double>"
+        assert [tuple(r) for r in v2.collect()] == [("x", "b", 2.5)]
+
+        # a single file rewritten under the same name
+        single = os.path.join(base, "single.parquet")
+        pq.write_table(pa.table({"k": pa.array([1], pa.int64())}), single)
+        assert read_parquet_table(spark, base, "single").columns == ["k"]
+        pq.write_table(pa.table({"k": pa.array(["7"]), "v": pa.array([3.0])}), single)
+        w2 = read_parquet_table(spark, base, "single")
+        assert w2.schema.simpleString() == "struct<k:string,v:double>"
+        assert [tuple(r) for r in w2.collect()] == [("7", 3.0)]
+
+    def test_cached_events_ts_is_timestamp_ntz(self, spark):
+        from pyspark.sql import types as T
+
+        from employee_analytics_etl_spark.sources import readers
+        from tests.conftest import SF_SMOKE
+
+        readers._SCHEMA_CACHE.pop(spark, None)
+        inferred = readers.read_parquet_table(spark, SF_SMOKE, "events")
+        cached, jobs = self._jobs(spark, lambda: readers.read_parquet_table(spark, SF_SMOKE, "events"))
+        assert jobs == 0
+        for df in (inferred, cached):
+            assert isinstance(df.schema["ts"].dataType, T.TimestampNTZType)
+        key = ["event_id", "ts"]
+        assert sorted(map(tuple, cached.select(key).collect())) == sorted(
+            map(tuple, inferred.select(key).collect())
+        )
+
+    def test_cache_holds_schemas_only(self, spark):
+        from pyspark.sql import types as T
+
+        from employee_analytics_etl_spark.sources import readers
+        from tests.conftest import SF_SMOKE
+
+        for table in ("orders", "events"):
+            readers.read_parquet_table(spark, SF_SMOKE, table)
+        entries = readers._SCHEMA_CACHE[spark]
+        assert entries
+        for fingerprint, confs, schema in entries.values():
+            assert isinstance(schema, T.StructType)
+            assert all(isinstance(n, str) and isinstance(size, int) and isinstance(mtime, int)
+                       for n, size, mtime in fingerprint)
+            assert all(isinstance(v, str) for v in confs)
+        # a new session never inherits another session's entries
+        assert spark.newSession() not in readers._SCHEMA_CACHE
+
+
 class TestFixedWidthSource:
     def test_fixed_width_parse_trim_ragged_and_permissive(
         self, spark, tmp_path
